@@ -37,18 +37,16 @@ either side may be the big one:
 
 ``mode="auto"`` routes by BOTH sides' sizes: small tree →
 broadcast_tree; big tree + small query set → broadcast_queries; big
-tree + big query set → chunked colocated traversal (query side
-streamed in bounded chunks; the tree never moves), re-sharding the
-tree first if its per-partition forests exceed a traversal task's
-budget. bfs is explicit-opt-in only (``mode="bfs"``) — it was measured
-to lose to brute force at k>=2 (SCALING.md round-4/5).
+tree + big query set → filegroups, re-sharding the tree first if its
+per-partition forests exceed a traversal task's budget. bfs is
+explicit-opt-in only (``mode="bfs"``) — it was measured to lose to
+brute force at k>=2 (SCALING.md round-4/5).
 
-``mode="filegroups"`` is the chunked strategy with the driver taken
-off the data path: the query side is hashed into parquet file groups
-executor-side and each chunk's traversal tasks read their group from
-shared storage — for query sides so large that even streaming them
-through the driver (toLocalIterator + per-chunk broadcast) would make
-the driver NIC the throughput ceiling.
+``mode="filegroups"`` (also auto's both-sides-big route) keeps the
+driver off the data path: the query side is hashed into parquet file
+groups executor-side, then ONE traversal job runs over the forests,
+each task reading every group file from shared storage in turn (``write_query_groups`` + ``query_groups``) — the tree never
+moves and no query string passes through the driver.
 """
 
 from __future__ import annotations
@@ -122,39 +120,24 @@ _DRIVER_MERGE_NODES = 100_000
 
 # Distinct query strings up to this count may be collected + broadcast
 # (tens of MB of driver memory); beyond it, with the tree ALSO too big
-# to collect, mode="auto" streams the query side in chunks of this size
-# through the distributed-tree traversal (see
-# _query_broadcast_queries_chunked).
-_AUTO_BROADCAST_QUERIES = 1_000_000
-
-# Beyond this many distinct query strings, even STREAMING the query
-# side through the driver (toLocalIterator + per-chunk re-broadcast)
-# makes the driver NIC the throughput ceiling (~2+ GB of text funneled
-# up and back down per pass at this count) — mode="auto" switches its
-# chunk loop to the filegroups strategy: executors write parquet query
-# groups, traversal tasks read them from shared storage, the driver
-# handles only paths. On a real cluster set
+# to collect, mode="auto" writes the query side to file groups of this
+# size and traverses them in one job (see
+# _query_broadcast_queries_filegroups). On a real cluster set
 # spark.prefixtree.filegroups.scratch to a shared-filesystem path;
 # unset, the scratch defaults to a driver-local tempdir (correct on
 # local[...] where all executors share the host).
-_AUTO_FILEGROUP_QUERIES = 20_000_000
+_AUTO_BROADCAST_QUERIES = 1_000_000
 
-# Chunk jobs the funnel loop keeps in flight (driver threads). 1 =
-# strictly serial (the r13-measured default when fetch ran one job per
-# small partition); >1 overlaps the next chunk's toLocalIterator fetch
-# with the current chunk's traversal job (guide §2.6). The driver
-# memory bound becomes this many chunks of query strings in flight.
-_CHUNK_PIPELINE_DEPTH = 1
-
-# With both sides big, auto mode chunks the query side as long as the
-# tree's per-partition forests still fit one traversal task (the
+# With both sides big, auto mode traverses the tree in place as long
+# as its per-partition forests still fit one traversal task (the
 # colocated mapInPandas materializes a partition's forest in pandas:
 # ~100 B/node → 20M nodes ≈ 2 GB). Beyond that auto RE-SHARDS the tree
 # (rebuild from end-cap words at more partitions — forest granularity
-# is a build artifact, not a law) and chunks anyway: bfs, the one
-# strategy measured to LOSE to brute force at k>=2 (SCALING.md
-# round-4/5: 298 s vs ~56 s), is never auto-chosen — it stays an
-# explicit ``mode="bfs"`` opt-in for trees that must not be rebuilt.
+# is a build artifact, not a law) and traverses the rebuild instead:
+# bfs, the one strategy measured to LOSE to brute force at k>=2
+# (SCALING.md round-4/5: 298 s vs ~56 s), is never auto-chosen — it
+# stays an explicit ``mode="bfs"`` opt-in for trees that must not be
+# rebuilt.
 _CHUNK_MAX_PARTITION_NODES = 20_000_000
 
 # Re-shard target: rebuild at ~cap/4 nodes per partition. The rebuild's
@@ -390,58 +373,9 @@ def _traverse_index(idx: "LocalIndex", batch: QueryBatch, k: int) -> pd.DataFram
 # ---------------------------------------------------------------------------
 
 
-# Above this many chunk frames, _union_all collapses each block of
-# this size into ONE re-checkpointed frame before unioning further:
-# the balanced tree bounds plan DEPTH at log2(n), but plan SIZE (one
-# leaf per chunk) still grows linearly, and at the thousands-of-chunks
-# scale filegroups exists for, analyzer time + driver plan memory grow
-# with it on every action against the returned frame (r13 verdict #6).
-# The collapse costs one extra pass over each block's (already
-# materialized) results — reading cached blocks, writing one combined
-# checkpoint — and keeps every later plan at <= this many leaves.
-_UNION_COLLAPSE_FANOUT = 64
-
-
-def _union_all(frames: list[DataFrame]) -> DataFrame:
-    """Balanced (pairwise-tree) union of per-chunk results, with plan
-    SIZE bounded by block-collapsing past ``_UNION_COLLAPSE_FANOUT``.
-
-    A linear ``unionByName`` chain builds a plan tree whose depth is
-    the CHUNK COUNT — at the thousands-of-chunks scale the filegroups
-    strategy exists for, analyzer/optimizer recursion over that chain
-    is itself a driver cost and, far enough out, a stack-depth hazard.
-    The pairwise tree bounds depth at log2(n) (12 levels at 4096
-    chunks). Same rows, same order-insensitive result; measured equal
-    warm and ~1.5x faster on the first (plan-building) pass at 400
-    chunks (tools probe, r13). Past the fanout, each block of
-    ``_UNION_COLLAPSE_FANOUT`` checkpointed chunk results is unioned
-    and re-checkpointed eagerly, so the frame handed back never carries
-    more than fanout leaves no matter how many chunks ran (the r13
-    400-frame probe measured the first action's plan pass growing with
-    leaf count even on the balanced tree)."""
-
-    def tree(fs: list[DataFrame]) -> DataFrame:
-        while len(fs) > 1:
-            fs = [
-                fs[i].unionByName(fs[i + 1]) if i + 1 < len(fs) else fs[i]
-                for i in range(0, len(fs), 2)
-            ]
-        return fs[0]
-
-    fs = frames
-    while len(fs) > _UNION_COLLAPSE_FANOUT:
-        fs = [
-            tree(fs[i : i + _UNION_COLLAPSE_FANOUT]).localCheckpoint(
-                eager=True
-            )
-            for i in range(0, len(fs), _UNION_COLLAPSE_FANOUT)
-        ]
-    return tree(fs)
-
-
 def _colocate_forests(pt: DataFrame) -> DataFrame:
     """Reshuffle the node table so each partition holds whole forests,
-    spread evenly — the colocation shuffle ahead of a chunk loop.
+    spread evenly — the colocation shuffle ahead of a traversal.
 
     RANGE partitioning at 2x parallelism, not hash at 1x (r13): the
     number of forests is ~the build partition count, which is ~the
@@ -454,14 +388,25 @@ def _colocate_forests(pt: DataFrame) -> DataFrame:
     4.2 -> 1.95 s, chunk job 2.2-2.7 s). Equal keys land in one range
     partition, so the whole-forest contract holds. The explicit N also
     dodges the AQE-coalesce trap (the node table's small byte size
-    otherwise coalesces to ~1 partition and the loop runs single-task).
-    The range sampling pass is one extra job, paid once per chunk LOOP,
-    never per chunk."""
+    otherwise coalesces to ~1 partition and the traversal runs
+    single-task). The range sampling pass is one extra job per call."""
     n_part = 2 * max(
         pt.rdd.getNumPartitions(),
         pt.sparkSession.sparkContext.defaultParallelism,
     )
     return pt.repartitionByRange(n_part, "compute_node")
+
+
+def _forest_pdf(batches) -> pd.DataFrame | None:
+    """One traversal task's node rows as a single frame, or None for an
+    empty partition. A partition holding several complete forests
+    traverses correctly: node ids are globally unique and every forest
+    root hangs off the virtual root, so the CSR index is the forests'
+    union (same argument as _merged_local_index's merge=False route)."""
+    frames = [pdf for pdf in batches if len(pdf)]
+    if not frames:
+        return None
+    return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
 
 class _QueryPayload:
@@ -470,12 +415,13 @@ class _QueryPayload:
     it on the unpickled holder — which the pyspark broadcast registry
     caches per worker process — so every per-task derived cost (the
     dense codes matrix, the valid mask, the per-k padded transpose) is
-    paid once per WORKER per chunk instead of once per TASK, while the
-    wire still carries the compact string list (the prebuilt-QueryBatch
+    paid once per WORKER instead of once per TASK, while the wire
+    still carries the compact string list (the prebuilt-QueryBatch
     broadcast alternative ships the padded int32 codes matrix, ~9x the
-    bytes at name-length payloads — wrong trade at the 1M-query chunk
-    cap even though it measured the same locally; probe_payload_r13).
-    Workers run tasks serially, so the memo needs no lock."""
+    bytes at name-length payloads — wrong trade at the 1M-query
+    broadcast cap even though it measured the same locally;
+    probe_payload_r13). Workers run tasks serially, so the memo needs
+    no lock."""
 
     __slots__ = ("queries", "_batch")
 
@@ -509,35 +455,16 @@ def _query_broadcast_queries(
     Otherwise a groupBy(compute_node) shuffle restores colocation
     first. At scale the zero-shuffle path is the point of this mode:
     only the (small) query batch moves."""
-    df, _bq = _query_broadcast_queries_bc(
-        pt, query_strings, k, colocated=colocated
-    )
-    return df
-
-
-def _query_broadcast_queries_bc(
-    pt: DataFrame, query_strings: list[str], k: int, *, colocated: bool = False
-):
-    """`_query_broadcast_queries` returning ``(df, broadcast)`` so loop
-    callers can ``destroy()`` each chunk's broadcast right after its
-    eager checkpoint (r13 advice): each reused Python worker otherwise
-    retains every chunk's unpickled payload (and its memoized
-    QueryBatch, ~9x the string bytes) in its broadcast registry until
-    the JVM ContextCleaner happens to GC the handle — nondeterministic
-    worker RSS growth at the thousands-of-chunks scale the chunk loops
-    target."""
     spark = pt.sparkSession
     bq = spark.sparkContext.broadcast(_QueryPayload(query_strings))
 
     def run_partition(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        yield _traverse_pdf(pdf, bq.value.batch(), k)
+        pdf = _forest_pdf(batches)
+        if pdf is not None:
+            yield _traverse_pdf(pdf, bq.value.batch(), k)
 
     if colocated:
-        return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA), bq
+        return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA)
     # restore colocation with an EXPLICIT-count repartition + the same
     # per-partition traversal — NOT groupBy().applyInPandas: AQE
     # coalesces the group exchange's small byte size to ~1 partition
@@ -545,142 +472,13 @@ def _query_broadcast_queries_bc(
     # sequentially inside it (measured: 14.5 s vs 1.4 s colocated at
     # 14k queries × 32 forests — QueryBatch init is ~0.5 s at that
     # batch size). A partition holding several complete forests
-    # traverses correctly: node ids are globally unique and every
-    # forest root hangs off the virtual root, so the CSR index is the
-    # forests' union (same argument as _merged_local_index's
-    # merge=False route).
+    # traverses correctly (see _forest_pdf).
     n_part = max(
         pt.rdd.getNumPartitions(), spark.sparkContext.defaultParallelism
     )
-    return (
-        pt.repartition(n_part, "compute_node").mapInPandas(
-            run_partition, schema=RESULT_SCHEMA
-        ),
-        bq,
+    return pt.repartition(n_part, "compute_node").mapInPandas(
+        run_partition, schema=RESULT_SCHEMA
     )
-
-
-def _query_broadcast_queries_chunked(
-    pt: DataFrame,
-    qdf: DataFrame,
-    k: int,
-    *,
-    colocated: bool = False,
-    chunk_size: int | None = None,
-) -> DataFrame:
-    """Both-sides-big strategy: iterate ``_query_broadcast_queries``
-    over bounded slices of the query side, pinning each slice's result.
-
-    The round-4 regime map (SCALING.md) showed bfs LOSING to brute
-    force at k>=2 when both sides are big (weaker pruning explodes the
-    frontier; per-level checkpoints pay for it), while
-    broadcast_queries won by 17x whenever the query side fit — so auto
-    mode now CHUNKS the query side through that winning strategy
-    instead of falling through to bfs. Driver memory stays bounded by
-    one chunk (``toLocalIterator`` streams the query strings); the
-    tree never moves (colocated traversal) and is traversed once per
-    chunk — per-chunk cost is flat, total cost is linear in the number
-    of chunks, and nothing in the plan depends on both sides at once.
-    """
-    spark = pt.sparkSession
-    if chunk_size is None:
-        chunk_size = _AUTO_BROADCAST_QUERIES
-    chunk_size = max(1, chunk_size)
-    owned = None
-    if not colocated:
-        # colocate ONCE for all chunks (the per-call strategy would
-        # re-shuffle the tree per chunk through its groupBy); range
-        # spread at 2x parallelism — see _colocate_forests for the
-        # measured hash-collision/AQE rationale
-        owned = pt = _colocate_forests(pt).persist()
-        pt.count()
-    # Deliberately SERIAL (r13): pipelining the traversal onto a worker
-    # thread while the main thread pulls the next chunk off
-    # toLocalIterator was measured SLOWER at 13 chunks (57.0/53.6 s
-    # serial vs 58.5/62.2 s piped) — the overlapped traversal jobs
-    # contend with the iterator's own per-partition fetch jobs and
-    # stall chunk formation. query_groups (whose chunks are pure Spark
-    # jobs with no driver iterator to starve) is where the overlap
-    # pays, and has it.
-    #
-    # Fetch granularity (r13): toLocalIterator runs ONE job per
-    # partition of its input, so iterating the query side at its
-    # shuffle-partition count pays a driver round trip per (small)
-    # partition — ~90 ms each, ~3 s of the measured 28 s both-big wall
-    # at 32 partitions. Coalescing the (persisted) query side to
-    # ~chunk-sized partitions makes fetch jobs as big as the chunks the
-    # loop builds anyway: same driver-memory bound (one partition ≈ one
-    # chunk in flight), 10x fewer round trips. coalesce() is narrow —
-    # reading from the cache, no shuffle; chunk membership may shift,
-    # which is invisible in the unioned result (each distinct string
-    # traverses exactly once either way).
-    lvl = qdf.storageLevel
-    n_q_parts = qdf.rdd.getNumPartitions()
-    if (lvl.useMemory or lvl.useDisk) and n_q_parts > 1:
-        # sizing needs a count; only the persisted path (mode="auto",
-        # which pins the query side for its own probe) gets it for free
-        target = max(1, min(n_q_parts, -(-qdf.count() // chunk_size)))
-        if target < n_q_parts:
-            qdf = qdf.coalesce(target)
-    chunks: list[DataFrame] = []
-
-    def run_chunk(buf: list[str]) -> DataFrame:
-        df, bq = _query_broadcast_queries_bc(pt, buf, k, colocated=True)
-        df = df.localCheckpoint(eager=True)
-        # the checkpoint materialized every partition: the chunk's
-        # broadcast is dead weight from here. Destroy it NOW (r13
-        # advice) — otherwise every reused Python worker retains every
-        # chunk's unpickled payload + memoized QueryBatch in its
-        # broadcast registry until ContextCleaner GC happens to run,
-        # i.e. nondeterministic worker RSS growth over thousands of
-        # chunks.
-        bq.destroy()
-        return df
-
-    depth = max(1, int(_CHUNK_PIPELINE_DEPTH))
-    try:
-        if depth == 1:
-            buf: list[str] = []
-            for row in qdf.toLocalIterator():
-                buf.append(row[0])
-                if len(buf) >= chunk_size:
-                    chunks.append(run_chunk(buf))
-                    buf = []
-            if buf:
-                chunks.append(run_chunk(buf))
-        else:
-            # overlap the NEXT chunk's fetch with the current chunk's
-            # traversal job (guide §2.6): the traversal jobs leave the
-            # cluster idle during each chunk's driver turnaround
-            # (string fetch + broadcast + checkpoint bookkeeping), and
-            # with the fetch coalesced to chunk-sized partitions the
-            # r13 contention (per-partition fetch jobs starving chunk
-            # formation) is gone. Bounded: at most ``depth`` chunk
-            # jobs in flight, so the driver-memory bound stays
-            # ``depth`` chunks of strings.
-            from collections import deque
-            from concurrent.futures import ThreadPoolExecutor
-
-            pending: "deque" = deque()
-            with ThreadPoolExecutor(max_workers=depth) as pool:
-                buf = []
-                for row in qdf.toLocalIterator():
-                    buf.append(row[0])
-                    if len(buf) >= chunk_size:
-                        pending.append(pool.submit(run_chunk, buf))
-                        buf = []
-                        while len(pending) >= depth:
-                            chunks.append(pending.popleft().result())
-                if buf:
-                    pending.append(pool.submit(run_chunk, buf))
-                while pending:
-                    chunks.append(pending.popleft().result())
-    finally:
-        if owned is not None:
-            owned.unpersist()
-    if not chunks:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    return _union_all(chunks)
 
 
 def _query_broadcast_queries_filegroups(
@@ -692,65 +490,41 @@ def _query_broadcast_queries_filegroups(
     chunk_size: int | None = None,
     scratch_dir: str | None = None,
 ) -> DataFrame:
-    """Both-sides-big strategy without the driver funnel (r12 verdict
-    #5): the query side is written to parquet FILE GROUPS by the
-    executors, and each chunk's traversal tasks read their group's
-    file directly — the driver orchestrates only paths and never
-    deserializes a single query string.
-
-    ``_query_broadcast_queries_chunked`` streams the query side
-    through ``toLocalIterator`` and re-broadcasts each chunk, which is
-    correct and memory-bounded but puts the driver NIC on the data
-    path twice per chunk (collect up, broadcast down). At a truly
-    query-side-huge scale (billions of strings) that funnel is the
-    throughput ceiling. Here the movement is executors → shared
-    storage → executors: one distributed write hashed on the query
-    column (each DISTINCT string lands in exactly one group, so chunk
-    results cannot duplicate), then per chunk every traversal task
-    reads the group file from storage at aggregate-cluster read
-    bandwidth. Per-chunk structure is otherwise identical to the
-    broadcast path (same colocated zero-shuffle traversal, same eager
-    pin per chunk), so correctness is the same union-of-chunks
-    argument.
+    """Both-sides-big strategy — auto's route whenever neither side can
+    be collected, and ``mode="filegroups"``: the query side is written
+    to parquet FILE GROUPS by the executors (``write_query_groups``),
+    then ``query_groups`` traverses every forest against every group
+    in ONE job. The query text moves executors → shared storage →
+    executors; the driver orchestrates only paths and never
+    deserializes a single query string, so its memory stays flat at
+    any query-side scale. The group files are removed before
+    returning (the result is already pinned).
 
     ``scratch_dir`` must be visible to every executor (any shared
-    filesystem; defaults to a local tempdir, which is exactly right on
-    local[...] and on a cluster must be overridden with e.g. an HDFS
-    or object-store path). Task-side reads go through pyarrow on the
+    filesystem; defaults to the ``spark.prefixtree.filegroups.scratch``
+    conf, else a local tempdir, which is exactly right on local[...]
+    and on a cluster must be overridden with e.g. an HDFS or
+    object-store path). Task-side reads go through pyarrow on the
     plain path."""
     import os
     import shutil
     import tempfile
     import uuid as _uuid
 
-    spark = pt.sparkSession
-    if chunk_size is None:
-        chunk_size = _AUTO_BROADCAST_QUERIES
-    chunk_size = max(1, chunk_size)
-    qcol = qdf.columns[0]
-    owned = None
-    if not colocated:
-        # colocate ONCE for all chunks — see _colocate_forests for the
-        # range-spread/AQE rationale
-        owned = pt = _colocate_forests(pt).persist()
-        pt.count()
     if scratch_dir is None:
-        scratch_dir = spark.conf.get(
+        scratch_dir = pt.sparkSession.conf.get(
             "spark.prefixtree.filegroups.scratch", None
         )
-    own_scratch = scratch_dir is None
     root = (
         tempfile.mkdtemp(prefix="ptq_filegroups_")
-        if own_scratch
+        if scratch_dir is None
         else os.path.join(scratch_dir, f"ptq_filegroups_{_uuid.uuid4().hex}")
     )
     out_dir = os.path.join(root, "query_groups")
     try:
-        write_query_groups(qdf, qcol, out_dir, chunk_size=chunk_size)
-        return query_groups(pt, out_dir, k, colocated=True, _qcol=qcol)
+        write_query_groups(qdf, qdf.columns[0], out_dir, chunk_size=chunk_size)
+        return query_groups(pt, out_dir, k, colocated=colocated)
     finally:
-        if owned is not None:
-            owned.unpersist()
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -760,16 +534,14 @@ def write_query_groups(
     """Write a query side to parquet FILE GROUPS for ``query_groups``:
     distinct non-null strings hash-partitioned on the query column into
     ``ceil(n / chunk_size)`` files — each string in exactly one group,
-    so downstream chunk results cannot duplicate. The write is
-    executor-side end to end; the driver never holds a query string.
+    so group results cannot duplicate. The write is executor-side end
+    to end; the driver never holds a query string.
 
     The write-once/query-many half of the filegroups strategy: a
     pipeline that matches the same (huge) query corpus against many
     trees, distances, or index generations pays the distinct + write
     once and every ``query_groups`` call after that is pure traversal.
     Returns the number of file groups written."""
-    import os
-
     if chunk_size is None:
         chunk_size = _AUTO_BROADCAST_QUERIES
     chunk_size = max(1, chunk_size)
@@ -780,7 +552,11 @@ def write_query_groups(
     )
     n_q = qdf.count()
     n_files = max(1, -(-n_q // chunk_size))
-    qdf.repartition(n_files, col).write.mode("overwrite").parquet(path)
+    # hash an EXPRESSION, not the bare column: repartition(n, col) at
+    # n == spark.sql.shuffle.partitions matches the distinct()
+    # exchange's own partitioning, Spark drops the explicit exchange,
+    # and AQE then coalesces the distinct's small output to one file
+    qdf.repartition(n_files, F.xxhash64(col)).write.mode("overwrite").parquet(path)
     return len(_list_query_groups(path))
 
 
@@ -790,40 +566,36 @@ def query_groups(
     max_distance: int,
     *,
     colocated: bool = False,
-    max_concurrent: int = 2,
-    _qcol: str | None = None,
 ) -> DataFrame:
     """Batch fuzzy search over a query side pre-written by
     ``write_query_groups`` — the both-sides-big strategy with the
-    driver off the data path, as a reusable public step. One colocated
-    zero-shuffle traversal of the (distributed) tree per file group;
-    each group's traversal tasks read the group file straight from
-    storage; per-group results are pinned eagerly and unioned. Same
-    result contract as ``query``: DataFrame[query_string, node,
+    driver off the data path, as a reusable public step. Same result
+    contract as ``query``: DataFrame[query_string, node,
     final_distance].
+
+    ONE traversal job, however many groups: a ``mapInPandas`` over the
+    (distributed) tree in which each task builds its forest's
+    traversal index once, then reads the group files in order straight
+    from storage, holding one group's query batch at a time and
+    yielding that group's rows before reading the next. The result is
+    pinned with one eager ``localCheckpoint``, so the group files may
+    be deleted as soon as this returns. Memory bound per task: one
+    forest plus one group's strings. Retry cost: a failed task redoes
+    its forest against EVERY group, not one group's share.
 
     ``path`` must be visible to every executor (shared storage on a
     real cluster). ``colocated=True`` promises ``pt`` is fresh from
-    ``create``/``load_index`` — else the tree is colocated once here
-    for all groups.
-
-    ``max_concurrent`` group jobs run at once (driver threads
-    submitting independent Spark jobs): a strictly serial loop leaves
-    the cluster idle during each chunk's driver-side turnaround
-    (scheduling, checkpoint bookkeeping — the measured ~3 s/chunk
-    fixed cost, SCALING r12), and overlapping the NEXT group's job
-    into that gap hides it. Results are unioned in group order either
-    way, and each job pins its own result, so concurrency changes
-    wall-clock, never rows. Memory bound: ``max_concurrent`` in-flight
-    group reads (one group's strings per traversal task)."""
+    ``create``/``load_index`` — else the colocation shuffle
+    (``_colocate_forests``) runs inside the same plan."""
     import os
 
+    import pyarrow.parquet as pq
+
     k = int(max_distance)
-    spark = pt.sparkSession
     # refuse a partial write: a crashed/in-flight write_query_groups
     # leaves part files without the _SUCCESS marker, and serving those
     # would silently DROP every query in the unwritten groups — the
-    # worst failure mode for a correctness-critical join. (The interim
+    # worst failure mode for a correctness-critical join. (The
     # filegroups mode path always writes then reads in-process, so its
     # marker is guaranteed present.)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -834,43 +606,28 @@ def query_groups(
         )
     files = _list_query_groups(path)
     if not files:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    if _qcol is None:
-        import pyarrow.parquet as pq
-
-        _qcol = pq.ParquetFile(files[0]).schema_arrow.names[0]
-    owned = None
+        return pt.sparkSession.createDataFrame([], RESULT_SCHEMA)
+    qcol = pq.ParquetFile(files[0]).schema_arrow.names[0]
     if not colocated:
-        # see _colocate_forests for the range-spread/AQE rationale
-        owned = pt = _colocate_forests(pt).persist()
-        pt.count()
-    try:
-        cap = max(2, int(max_concurrent))
-        if max_concurrent <= 1 or len(files) == 1:
-            chunks = [
-                _query_filegroup(
-                    pt, f, _qcol, k, cache_capacity=cap
-                ).localCheckpoint(eager=True)
-                for f in files
-            ]
-        else:
-            from concurrent.futures import ThreadPoolExecutor
+        pt = _colocate_forests(pt)
 
-            with ThreadPoolExecutor(
-                max_workers=max(1, int(max_concurrent))
-            ) as pool:
-                chunks = list(
-                    pool.map(
-                        lambda f: _query_filegroup(
-                            pt, f, _qcol, k, cache_capacity=cap
-                        ).localCheckpoint(eager=True),
-                        files,
-                    )
-                )
-        return _union_all(chunks)
-    finally:
-        if owned is not None:
-            owned.unpersist()
+    def run_partition(batches):
+        pdf = _forest_pdf(batches)
+        if pdf is None:
+            return
+        index = LocalIndex(pdf, merge=False)
+        for f in files:
+            strings = [
+                s
+                for s in pq.read_table(f, columns=[qcol]).column(0).to_pylist()
+                if s is not None
+            ]
+            if strings:
+                yield _traverse_index(index, QueryBatch(strings), k)
+
+    return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA).localCheckpoint(
+        eager=True
+    )
 
 
 def _list_query_groups(path: str) -> list[str]:
@@ -881,71 +638,6 @@ def _list_query_groups(path: str) -> list[str]:
         for f in os.listdir(path)
         if f.startswith("part-") and f.endswith(".parquet")
     )
-
-
-# Per-WORKER memo of file-group query batches: every traversal task of
-# one chunk job reads the same group file and builds the same
-# QueryBatch; with reused python workers (spark.python.worker.reuse,
-# the default) the second and later tasks on a worker can skip both.
-# Keyed by (path, qcol, mtime_ns, size) so a rewritten group file can
-# never serve a stale batch. Capacity scales with the number of group
-# jobs interleaving tasks on one worker (query_groups passes its
-# max_concurrent — r13 advice: the hardcoded 2 silently thrashed the
-# LRU whenever a caller raised max_concurrent, every task rebuilding
-# its QueryBatch); memory bound is capacity x one chunk's QueryBatch
-# footprint per worker — the same order ``capacity`` concurrently
-# running tasks already hold today.
-_FILEGROUP_BATCH_CACHE: "OrderedDict[tuple, QueryBatch]" = OrderedDict()
-_FILEGROUP_BATCH_CAPACITY = 2
-
-
-def _filegroup_batch(
-    chunk_path: str, qcol: str, capacity: int = _FILEGROUP_BATCH_CAPACITY
-) -> QueryBatch:
-    import os
-
-    st = os.stat(chunk_path)
-    key = (chunk_path, qcol, st.st_mtime_ns, st.st_size)
-    cached = _FILEGROUP_BATCH_CACHE.get(key)
-    if cached is not None:
-        _FILEGROUP_BATCH_CACHE.move_to_end(key)
-        return cached
-    import pyarrow.parquet as pq
-
-    strings = [
-        s
-        for s in pq.read_table(chunk_path, columns=[qcol]).column(0).to_pylist()
-        if s is not None
-    ]
-    batch = QueryBatch(strings)
-    _FILEGROUP_BATCH_CACHE[key] = batch
-    cap = max(int(capacity), _FILEGROUP_BATCH_CAPACITY)
-    while len(_FILEGROUP_BATCH_CACHE) > cap:
-        _FILEGROUP_BATCH_CACHE.popitem(last=False)
-    return batch
-
-
-def _query_filegroup(
-    pt: DataFrame, chunk_path: str, qcol: str, k: int, cache_capacity: int = 2
-) -> DataFrame:
-    """One file-group chunk of ``_query_broadcast_queries_filegroups``:
-    the colocated per-forest traversal of ``_query_broadcast_queries``,
-    except each task reads the chunk's query strings from storage
-    instead of a driver broadcast. Only the path string rides the task
-    closure; the read + QueryBatch build are memoized per worker
-    (``_filegroup_batch``, LRU sized to the caller's job concurrency)."""
-
-    def run_partition(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        batch = _filegroup_batch(chunk_path, qcol, cache_capacity)
-        if not len(batch):
-            return
-        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-        yield _traverse_pdf(pdf, batch, k)
-
-    return pt.mapInPandas(run_partition, schema=RESULT_SCHEMA)
 
 
 def reshard(pt: DataFrame, *, num_partitions: int | None = None) -> DataFrame:
@@ -1338,14 +1030,11 @@ def query(
             pt, [r[0] for r in qdf.collect()], k, colocated=colocated
         )
     if mode == "filegroups":
-        # both-sides-big without the driver funnel: the query side is
-        # hashed into parquet file groups executor-side and each
-        # chunk's traversal tasks read their group straight from
-        # storage — the driver never deserializes query text (the
-        # billions-of-queries scale path; see
-        # _query_broadcast_queries_filegroups). Opt-in: at the measured
-        # sf0.1 both-big shape the toLocalIterator chunk loop is
-        # equal-or-faster (SCALING r13), so auto keeps choosing it.
+        # auto's both-sides-big route, forced for any size: the query
+        # side is hashed into parquet file groups executor-side and
+        # one traversal job reads them straight from storage — the
+        # driver never deserializes query text (see
+        # _query_broadcast_queries_filegroups)
         return _query_broadcast_queries_filegroups(
             pt, qdf, k, colocated=colocated
         )
@@ -1396,10 +1085,10 @@ def query(
                 )
             # tree too big to collect: stays distributed. Probe the query
             # side BEFORE collecting it — with both sides large the
-            # query side must stream through in chunks, never collect
-            # whole. Pin the query side across the probe: count-then-
-            # collect on the unpinned frame ran its scan + distinct
-            # shuffle TWICE.
+            # query side goes to file groups, never collected whole.
+            # Pin the query side across the probe: count-then-collect
+            # on the unpinned frame ran its scan + distinct shuffle
+            # TWICE.
             qdf = qdf.persist()
             try:
                 n_q = qdf.count()
@@ -1409,50 +1098,24 @@ def query(
                     return _query_broadcast_queries(
                         pt, [r[0] for r in qdf.collect()], k, colocated=colocated
                     ).localCheckpoint(eager=True)
-                # big tree x big query set: chunk the query side through
-                # the distributed-tree traversal (round-4 verdict #2 — bfs
-                # measurably loses to brute force here at k>=2). Past
-                # _AUTO_FILEGROUP_QUERIES the chunk loop itself switches
-                # to filegroups — identical per-chunk traversal, but the
-                # query text moves executors → storage → executors
-                # instead of twice through the driver NIC (SCALING r13:
-                # flat driver RSS, ~equal wall, identical rows).
-                run_chunked = (
-                    _query_broadcast_queries_filegroups
-                    if n_q > _AUTO_FILEGROUP_QUERIES
-                    else _query_broadcast_queries_chunked
-                )
+                # big tree x big query set: file groups + one colocated
+                # traversal job (round-4 verdict #2 — bfs measurably
+                # loses to brute force here at k>=2); the query text
+                # moves executors → storage → executors, never through
+                # the driver (SCALING r13: flat driver RSS, identical
+                # rows).
                 per_part = n_nodes / max(1, pt.rdd.getNumPartitions())
                 if per_part <= _CHUNK_MAX_PARTITION_NODES:
-                    if colocated:
-                        return run_chunked(pt, qdf, k, colocated=True)
-                    # colocate HERE from the still-cached tree, then
-                    # release OUR pin before the chunk loop: letting
-                    # chunked pin its own copy while this frame's pt
-                    # stays persisted held TWO full cached trees for the
-                    # whole run — in exactly the regime defined by the
-                    # tree being too big to collect. Overlap now lasts
-                    # one repartition pass (caller-owned caches stay).
-                    # Range spread at explicit 2x N — see
-                    # _colocate_forests (hash-collision idle cores +
-                    # the r8 AQE-coalesce trap: both_big_auto_k2 44 s
-                    # vs 19 s when this exchange coalesced to ~1
-                    # partition).
-                    pt2 = _colocate_forests(pt).persist()
-                    try:
-                        pt2.count()
-                        if owned:
-                            pt.unpersist()
-                        return run_chunked(pt2, qdf, k, colocated=True)
-                    finally:
-                        pt2.unpersist()
+                    return _query_broadcast_queries_filegroups(
+                        pt, qdf, k, colocated=colocated
+                    )
                 # per-partition forests exceed a traversal task's
                 # budget: RE-SHARD instead of bfs (round-5 verdict #1 —
                 # bfs is the one plan measured to LOSE to brute force
                 # at k>=2). Forest granularity is a build artifact:
                 # rebuild distributed from the end-cap words at a
                 # partition count that brings forests back under the
-                # cap, then run the winning chunked traversal. Word set
+                # cap, then run the same file-group traversal. Word set
                 # (and therefore the result set) is preserved verbatim:
                 # trim="right" is identity on end-cap words and the
                 # length cap is lifted. bfs stays reachable only as an
@@ -1461,7 +1124,9 @@ def query(
                 try:
                     if owned:
                         pt.unpersist()
-                    return run_chunked(pt3, qdf, k, colocated=True)
+                    return _query_broadcast_queries_filegroups(
+                        pt3, qdf, k, colocated=True
+                    )
                 finally:
                     pt3.unpersist()
             finally:

@@ -196,11 +196,9 @@ def fuzzy_join_filegroups_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     gdir = tempfile.mkdtemp(prefix="wl_filegroups_")
     try:
         write_query_groups(qdf, "q", gdir, chunk_size=20)
-        out = query_groups(pt, gdir, 1)
-        # localCheckpointed per group inside query_groups, so the
-        # staging dir is safe to remove after materialization
-        out = out.localCheckpoint(eager=True)
-        return out
+        # query_groups returns an eagerly checkpointed frame, so the
+        # staging dir is safe to remove on return
+        return query_groups(pt, gdir, 1)
     finally:
         shutil.rmtree(gdir, ignore_errors=True)
 

@@ -1,7 +1,10 @@
 """Scale-path checks: zero-shuffle colocated traversal, bucketed index
 layout, and save/load colocation round trips."""
 
+from contextlib import contextmanager
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prefixtree_spark import create, load_index, query, save_index
@@ -13,6 +16,59 @@ from tests.test_query import QUERIES, _expected, _run
 
 def _plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+@contextmanager
+def _job_group(spark, group):
+    """Tag every Spark job the block submits with ``group``."""
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+
+
+def _traversal_jobs(spark, group) -> list[int]:
+    """Jobs of ``group`` that ran a file-group traversal. query_groups
+    pins its result with one eager localCheckpoint, whose result stage
+    carries that call site; the count and write jobs around it, and
+    the sampling and shuffle-map jobs of a colocation shuffle, do not."""
+    st = spark.sparkContext.statusTracker()
+    return [
+        j
+        for j in st.getJobIdsForGroup(group)
+        if any(
+            (info := st.getStageInfo(s)) is not None
+            and info.name.startswith("localCheckpoint")
+            for s in st.getJobInfo(j).stageIds
+        )
+    ]
+
+
+def _watch_file_group_route(monkeypatch):
+    """Fail the test if query text is streamed through the driver or
+    the losing bfs plan is chosen; returns the list that collects the
+    group count of every write_query_groups call."""
+    import prefixtree_spark.operators.query as qmod
+
+    monkeypatch.setattr(
+        DataFrame,
+        "toLocalIterator",
+        lambda self, *a, **kw: pytest.fail("query text streamed through the driver"),
+    )
+    monkeypatch.setattr(
+        qmod,
+        "_query_bfs",
+        lambda *a, **kw: pytest.fail("routed to bfs in the file-group regime"),
+    )
+    groups = []
+    real_write = qmod.write_query_groups
+    monkeypatch.setattr(
+        qmod,
+        "write_query_groups",
+        lambda *a, **kw: groups.append(real_write(*a, **kw)) or groups[-1],
+    )
+    return groups
 
 
 def test_colocated_zero_shuffle_plan_and_results(spark):
@@ -74,39 +130,25 @@ def test_similarity_join_rows_payload(spark):
     assert got == {(1, 10, 1, "x"), (1, 11, 2, "x"), (2, 11, 1, "y")}
 
 
-def test_auto_routes_big_tree_big_queries_to_chunked(spark, monkeypatch):
-    """When BOTH sides exceed the broadcast thresholds, auto must CHUNK
-    the query side through the distributed-tree traversal (round-4
+def test_auto_routes_big_tree_big_queries_to_filegroups(spark, monkeypatch):
+    """When BOTH sides exceed the broadcast thresholds, auto must write
+    the query side to file groups and traverse them in ONE job (round-4
     verdict #2: bfs loses to brute force at k>=2 in this regime) —
-    never collecting the whole query side at once, and never touching
+    never streaming query text through the driver, and never touching
     bfs while the tree's partitions still fit a traversal task."""
     import prefixtree_spark.operators.query as qmod
 
-    chunk_sizes = []
-    # the chunk loop calls the (df, broadcast) internal so it can
-    # destroy each chunk's broadcast after the eager pin (r14)
-    real_bq = qmod._query_broadcast_queries_bc
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_NODES", 0)
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)
-    monkeypatch.setattr(
-        qmod,
-        "_query_broadcast_queries_bc",
-        lambda pt, qs, k, **kw: chunk_sizes.append(len(qs))
-        or real_bq(pt, qs, k, **kw),
-    )
-    monkeypatch.setattr(
-        qmod,
-        "_query_bfs",
-        lambda *a, **kw: pytest.fail("routed to bfs in the chunkable regime"),
-    )
+    groups = _watch_file_group_route(monkeypatch)
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    res = qmod.query(pt, qdf, "q", 1, mode="auto")
+    with _job_group(spark, "auto_both_big"):
+        res = qmod.query(pt, qdf, "q", 1, mode="auto")
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
-    # every chunk bounded by the threshold, and more than one chunk ran
-    assert chunk_sizes and max(chunk_sizes) <= 2 and len(chunk_sizes) >= 2
-    assert sum(chunk_sizes) == len(set(QUERIES))
     assert got == _expected(SPARSE_WORDS, QUERIES, 1)
+    assert len(groups) == 1 and groups[0] >= 2
+    assert len(_traversal_jobs(spark, "auto_both_big")) == 1
 
 
 def test_auto_reshards_giant_forests_instead_of_bfs(spark, monkeypatch):
@@ -466,33 +508,20 @@ def test_auto_routes_midsize_tree_to_distributed_traversal(spark, monkeypatch):
 def test_filegroups_mode_matches_other_modes(spark, monkeypatch):
     """mode="filegroups" (r12 verdict #5: the both-big strategy with
     the driver off the data path) must return the exact row set of the
-    brute-force expectation, in multiple file-group chunks, without
-    the driver ever deserializing query text (the toLocalIterator of
-    the broadcast-chunked path is monkeypatched to fail)."""
+    brute-force expectation over several file groups, in one traversal
+    job, without the driver ever deserializing query text."""
     import prefixtree_spark.operators.query as qmod
 
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)  # force >1 group
-    group_paths = []
-    real_fg = qmod._query_filegroup
-    monkeypatch.setattr(
-        qmod,
-        "_query_filegroup",
-        lambda pt, path, qcol, k: group_paths.append(path)
-        or real_fg(pt, path, qcol, k),
-    )
+    groups = _watch_file_group_route(monkeypatch)
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    monkeypatch.setattr(
-        type(qdf),
-        "toLocalIterator",
-        lambda self, *a, **kw: pytest.fail(
-            "filegroups mode streamed query text through the driver"
-        ),
-    )
-    res = qmod.query(pt, qdf, "q", 2, mode="filegroups")
+    with _job_group(spark, "filegroups_mode"):
+        res = qmod.query(pt, qdf, "q", 2, mode="filegroups")
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 2)
-    assert len(group_paths) >= 2  # genuinely chunked into file groups
+    assert len(groups) == 1 and groups[0] >= 2
+    assert len(_traversal_jobs(spark, "filegroups_mode")) == 1
 
 
 def test_filegroups_colocated_zero_shuffle(spark):
@@ -532,35 +561,68 @@ def test_write_query_groups_reusable_across_distances(spark, tmp_path):
 
 
 def test_auto_routes_huge_query_side_to_filegroups(spark, monkeypatch):
-    """Past _AUTO_FILEGROUP_QUERIES, auto's chunk loop must switch to
-    the filegroups strategy (driver off the data path) — same rows,
-    file-group chunks actually used, toLocalIterator never called."""
+    """The colocated form of the both-sides-big route: with a tree
+    fresh from create (colocated=True), auto traverses it in place
+    against several file groups — same rows as brute force, one
+    traversal job, no driver funnel, no bfs."""
     import prefixtree_spark.operators.query as qmod
 
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_NODES", 0)
     monkeypatch.setattr(qmod, "_AUTO_BROADCAST_QUERIES", 2)
-    monkeypatch.setattr(qmod, "_AUTO_FILEGROUP_QUERIES", 2)
-    group_paths = []
-    real_fg = qmod._query_filegroup
-    monkeypatch.setattr(
-        qmod,
-        "_query_filegroup",
-        lambda pt, path, qcol, k: group_paths.append(path)
-        or real_fg(pt, path, qcol, k),
-    )
-    monkeypatch.setattr(
-        qmod,
-        "_query_broadcast_queries_chunked",
-        lambda *a, **kw: pytest.fail(
-            "auto used the driver-funnel chunk loop past the filegroup bound"
-        ),
-    )
+    groups = _watch_file_group_route(monkeypatch)
     pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3)
     qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
-    res = qmod.query(pt, qdf, "q", 1, mode="auto")
+    with _job_group(spark, "auto_colocated"):
+        res = qmod.query(pt, qdf, "q", 1, mode="auto", colocated=True)
     got = {(r.query_string, r.node, r.final_distance) for r in res.collect()}
     assert got == _expected(SPARSE_WORDS, QUERIES, 1)
-    assert len(group_paths) >= 2
+    assert len(groups) == 1 and groups[0] >= 2
+    assert len(_traversal_jobs(spark, "auto_colocated")) == 1
+
+
+def test_query_groups_is_one_job_for_any_group_count(spark, tmp_path):
+    """query_groups submits exactly ONE Spark job whatever the number
+    of groups (one mapInPandas over the forests, each task reading
+    every group in turn) and matches brute force at every count."""
+    from prefixtree_spark import query_groups, write_query_groups
+
+    pt = create(_words_df(spark, SPARSE_WORDS), "word", num_partitions=3).persist()
+    try:
+        pt.count()
+        qdf = spark.createDataFrame([(q,) for q in QUERIES], ["q"])
+        n_distinct = len(set(QUERIES))
+        seen = set()
+        for chunk in (1, 2, n_distinct):
+            path = str(tmp_path / f"groups_{chunk}")
+            seen.add(write_query_groups(qdf, "q", path, chunk_size=chunk))
+            group = f"query_groups_{chunk}"
+            with _job_group(spark, group):
+                res = query_groups(pt, path, 2, colocated=True)
+            jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+            assert len(jobs) == 1, (chunk, jobs)
+            assert _traversal_jobs(spark, group) == list(jobs)
+            got = {
+                (r.query_string, r.node, r.final_distance)
+                for r in res.collect()
+            }
+            assert got == _expected(SPARSE_WORDS, QUERIES, 2), chunk
+        assert 1 in seen and max(seen) >= 2
+    finally:
+        pt.unpersist()
+
+
+def test_write_query_groups_at_shuffle_partition_count(spark, tmp_path):
+    """Asking for exactly spark.sql.shuffle.partitions groups must
+    write that many files: repartition(n, col) at that n matched the
+    distinct() exchange's partitioning, Spark dropped the exchange and
+    AQE coalesced the whole query side into ONE group."""
+    from prefixtree_spark import write_query_groups
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    qdf = spark.createDataFrame([(f"q{i}",) for i in range(40 * n)], ["q"])
+    path = str(tmp_path / "groups")
+    assert write_query_groups(qdf, "q", path, chunk_size=40) == n
+    assert spark.read.parquet(path).distinct().count() == 40 * n
 
 
 def test_query_groups_refuses_partial_write(spark, tmp_path):

@@ -83,9 +83,7 @@ def main() -> None:
         pt_big.unpersist()
 
     if "union_bound" in names:
-        # >64 tiny chunks through query_groups: the plan of the
-        # returned frame must never carry more than
-        # _UNION_COLLAPSE_FANOUT leaves after the r14 collapse
+        # ~100 tiny file groups through query_groups
         import shutil
         import tempfile
 
